@@ -1,8 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed pass: the seconds of every query that completed, and the
+    * names of the queries that threw - a thrown query's time is not a
+    * timing, so it is left out of `times`. */
+  final case class Pass(times: Seq[(String, Double)], failed: Seq[String])
+
+  /** Time each query in order, running `trim` before every
+    * `trimEvery`-th one (0 never). A noop write forces full evaluation
+    * of every column (a bare count() would let Catalyst prune the work
+    * away). */
+  def pass(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+           trimEvery: Int, trim: () => Unit): Pass = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.zipWithIndex.flatMap { case ((name, fn), i) =>
+      if (trimEvery > 0 && i > 0 && i % trimEvery == 0) trim()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
+    }
+    Pass(times, failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -51,21 +80,8 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
     }
 
-    def pass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .zipWithIndex
-        .map { case ((name, fn), i) =>
-        if (trimEvery > 0 && i > 0 && i % trimEvery == 0) trimPassState()
-        val t0 = System.nanoTime()
-        // noop write forces full evaluation of every column (a bare count()
-        // would let Catalyst prune the work away)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
 
     // Release everything a pass leaves behind: memoized flagship results
     // (whose plans are rooted at localCheckpoint RDDs - drop the memo
@@ -167,14 +183,14 @@ object Bench {
       }
       (bytes / 1e6, (System.nanoTime() - t0) / 1e9)
     }
-    def runPasses(firstAttempt: Boolean): Seq[Seq[(String, Double)]] =
+    def runPasses(firstAttempt: Boolean): Seq[Pass] =
       (1 to nPasses).map { i =>
         if (i > 1 || !firstAttempt) resetPassState()
-        pass()
+        pass(spark, sfDir, selected, trimEvery, () => trimPassState())
       }
-    def skewOf(ps: Seq[Seq[(String, Double)]]): Double = {
-      val c = ps.head.map(_._2).sum
-      val w = ps.last.map(_._2).sum
+    def skewOf(ps: Seq[Pass]): Double = {
+      val c = ps.head.times.map(_._2).sum
+      val w = ps.last.times.map(_._2).sum
       if (math.min(c, w) > 0) math.abs(c - w) / math.min(c, w) else 0.0
     }
     // skew-retry (the r14 hole in the quiet gate): a run that passes
@@ -197,10 +213,10 @@ object Bench {
     val skewRetries =
       if (only.nonEmpty) 0
       else math.max(0, sys.env.getOrElse("SPARK_GRAFT_SKEW_RETRIES", "1").toInt)
-    var allAttempts = Vector(runPasses(firstAttempt = true))
+    var runs = Vector(runPasses(firstAttempt = true))
     var skewAttempts = 1
-    while (skewOf(allAttempts.last) > 0.25 && skewAttempts <= skewRetries) {
-      System.err.println(f"[bench] cold/warm skew ${skewOf(allAttempts.last)}%.3f" +
+    while (skewOf(runs.last) > 0.25 && skewAttempts <= skewRetries) {
+      System.err.println(f"[bench] cold/warm skew ${skewOf(runs.last)}%.3f" +
         " > 0.25 (mid-run contention) - skew-retry: re-running the pass set " +
         s"(attempt ${skewAttempts + 1})")
       loadAvg().filter(_ > 2.0).foreach { l =>
@@ -209,9 +225,14 @@ object Bench {
         Thread.sleep(quietSleepS * 1000L)
       }
       loadStart = loadAvg() // validity reflects the attempt that counts
-      allAttempts :+= runPasses(firstAttempt = false)
+      runs :+= runPasses(firstAttempt = false)
       skewAttempts += 1
     }
+    // a query that threw in ANY pass is listed in `failed` (and the run
+    // exits nonzero) instead of being timed: every timing below covers
+    // the same, fully successful query set, pass for pass
+    val failed = runs.flatten.flatMap(_.failed).distinct.sorted
+    val allAttempts = runs.map(_.map(_.times.filterNot(t => failed.contains(t._1))))
     val passes = allAttempts.last
     val coldFirstTotal = allAttempts.head.head.map(_._2).sum
     val loadEnd = loadAvg()
@@ -268,7 +289,7 @@ object Bench {
     // "not validated", recorded false.
     val valid = skew <= 0.25 && loadStart.exists(_ <= 2.0)
     val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"queries_warm":$qsWarm,"cold_total":${ms(coldTotal)},"warm_total":${ms(warmTotal)},"cold_total_first":${ms(coldFirstTotal)},"loadavg_start":${msOpt(loadStart)},"loadavg_first":${msOpt(loadFirst)},"loadavg_end":${msOpt(loadEnd)},"probe_io_mb":${ms(probeIoMb)},"probe_io_sec":${ms(probeIoSec)},"cold_warm_skew":${ms(skew)},"peak_heap_mb":${ms(peakHeapMb)},"valid":$valid,"attempts":$attempts,"skew_attempts":$skewAttempts,"boot_id":${bootId.map("\"" + _ + "\"").getOrElse("null")},"uptime_sec":${uptimeSec.map(u => f"$u%.0f").getOrElse("null")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"queries_warm":$qsWarm,"cold_total":${ms(coldTotal)},"warm_total":${ms(warmTotal)},"cold_total_first":${ms(coldFirstTotal)},"loadavg_start":${msOpt(loadStart)},"loadavg_first":${msOpt(loadFirst)},"loadavg_end":${msOpt(loadEnd)},"probe_io_mb":${ms(probeIoMb)},"probe_io_sec":${ms(probeIoSec)},"cold_warm_skew":${ms(skew)},"peak_heap_mb":${ms(peakHeapMb)},"valid":$valid,"attempts":$attempts,"skew_attempts":$skewAttempts,"boot_id":${bootId.map("\"" + _ + "\"").getOrElse("null")},"uptime_sec":${uptimeSec.map(u => f"$u%.0f").getOrElse("null")},"sf":"$sfDir","failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     if (only.isEmpty) { // a filtered run must not clobber the full record
       try {
         // cwd-relative: lands in whatever checkout ran the bench
@@ -281,5 +302,6 @@ object Bench {
     }
     println(line)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

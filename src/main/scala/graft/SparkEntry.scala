@@ -111,11 +111,11 @@ object SparkEntry {
     * registry queries cannot reach. The dir is session scratch,
     * removed by a JVM shutdown hook like the flagship state store. */
   /** The session's shuffle parallelism - the explicit partition count
-    * for repartitions that parallelize per-row codec/scoring work past
-    * a single-file scan task. The count MUST be explicit: a bare
-    * repartition(col) is an AQE-coalescable exchange, and at these row
-    * sizes AQE folds it straight back to one partition, silently
-    * re-serializing the map stage it was meant to spread. */
+    * that spreads a streaming file read (one file per micro-batch = one
+    * scan task) the way [[graft.llm.Spread.ifNarrow]] spreads a batch
+    * read; a streaming plan has no batch partition count to test. The
+    * count MUST be explicit: a bare repartition(col) is an
+    * AQE-coalescable exchange that folds back to one partition. */
   private def shufflePartitions(s: SparkSession): Int =
     s.conf.get("spark.sql.shuffle.partitions").toInt
 
@@ -139,18 +139,10 @@ object SparkEntry {
     }
   }
 
-  /** The documents read parallelized past the single scan task: the
-    * fixture parquet is ONE row group, so an unsplittable scan
-    * serializes every downstream per-row native stage (md5 sketches,
-    * tokenizers, gram streams - the dominant map work of the dedup and
-    * text families) onto one core (guide §2.5 input skew: one huge
-    * unsplittable file -> repartition immediately after the read). The
-    * exchange moves the raw text once; the per-row work it spreads is
-    * 10-50x the shuffle cost here (measured: the md5-minhash signature
-    * stage alone was 0.78 s single-task at sf0.1). Same pattern and
-    * justification as the q_mm_* codec queries. */
+  /** The documents read spread past its single scan task: the fixture
+    * parquet is ONE row group (rationale at [[graft.llm.Spread]]). */
   private def tDocsPar(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+    graft.llm.Spread.ifNarrow(t(s, dir, "documents"))
 
   /** The ONE scratch root for everything the registry materializes on
     * local disk (flagship state tables, export round-trips, stream
@@ -2274,8 +2266,7 @@ object SparkEntry {
       // neighborhood explode (heavy per-row map work) parallelizes
       // past the one scan task exactly like tDocsPar's documents read
       graft.operators.FuzzyJoin.levenshteinPairs(
-        t(s, dir, "customer")
-          .repartition(shufflePartitions(s), col("c_custkey")),
+        graft.llm.Spread.ifNarrow(t(s, dir, "customer"), "c_custkey"),
         idCol = "c_custkey", strCol = "c_name")),
 
     // per-user p95 outlier flags (exact percentile; approx variant is
@@ -2390,13 +2381,10 @@ object SparkEntry {
     // greedy order runs through the sharded prefix sum (no single-task
     // window), the straddling doc is kept (cum_before < budget)
     "q_sample_token_budget" -> ((s, dir) => {
-      // the fixture tables are single-row-group parquet files, so the
-      // scan stage is ONE task no matter the size; the regex-heavy
-      // scoring would serialize through it (measured: the 30x slope
-      // rose to ~0.9 purely from this). Repartition the raw text first
-      // - one cheap shuffle buys full-width parallelism for the map
-      // stage, exactly what multi-split input gives free at real scale
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      // tDocsPar: the regex-heavy scoring would serialize through the
+      // one scan task (measured: the 30x slope rose to ~0.9 purely
+      // from this)
+      val docs = tDocsPar(s, dir)
       val scored = TextAnalysis.withQualityFeatures(docs)
         .select(col("doc_id"),
           TextAnalysis.tokenCountBpeIsh(col("text")).as("n_tokens"),
@@ -2413,7 +2401,7 @@ object SparkEntry {
     "q_sample_budget_stratum" -> ((s, dir) => {
       // single-row-group source: parallelize the scoring map stage
       // explicitly (see q_sample_token_budget)
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = tDocsPar(s, dir)
       val scored = TextAnalysis.withQualityFeatures(docs)
         .select(col("doc_id"), col("source"),
           TextAnalysis.tokenCountBpeIsh(col("text")).as("n_tokens"),
@@ -3105,7 +3093,7 @@ object SparkEntry {
     "q_mm_image_phash" -> ((s, dir) => {
       // single-row-group source: repartition before the per-row codec
       // work so encode/decode parallelizes (see q_sample_token_budget)
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id")).select(
+      val docs = tDocsPar(s, dir).select(
         col("doc_id").cast("long").as("asset_id"),
         (col("doc_id") % 64).cast("int").as("c"),
         (col("doc_id") % 7 + 1).cast("int").as("a"),
@@ -3131,7 +3119,7 @@ object SparkEntry {
       // planted BMP twins at -doc_id - 1 (disjoint from real ids at
       // every scale factor; see q_mm_phash_pairs); repartitioned so the
       // per-row codec work parallelizes past the single-file scan task
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = tDocsPar(s, dir)
       val base = docs.select(col("doc_id").cast("long").as("asset_id"),
         graft.llm.Multimodal.blockNoiseImageBytes(
           col("doc_id"), 16, 16, 2, "png").as("bytes"))
@@ -3152,7 +3140,7 @@ object SparkEntry {
     // amplitude = (md5Byte("seed|i") - 128) * 256, so DuckDB verifies
     // the codec round trip arithmetically with its own md5.
     "q_mm_audio_phash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = tDocsPar(s, dir)
         .select(col("doc_id").cast("long").as("asset_id"))
       val staged = docs
         .withColumn("bytes", graft.llm.Multimodal.blockToneAudioBytes(
@@ -3171,7 +3159,7 @@ object SparkEntry {
     // WAV and AIFF decode paths recover identical PCM - byte-level the
     // two containers differ entirely (endianness included)
     "q_mm_audio_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = tDocsPar(s, dir)
       val base = docs.select(col("doc_id").cast("long").as("asset_id"),
         graft.llm.Multimodal.blockToneAudioBytes(
           col("doc_id"), 64, 25, "wav").as("bytes"))
@@ -3193,7 +3181,7 @@ object SparkEntry {
     // md5Byte("seed|f|i"), so DuckDB replays decode + sampling +
     // hashing arithmetically.
     "q_mm_video_frames" -> ((s, dir) => {
-      val assets = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val assets = tDocsPar(s, dir)
         .select(col("doc_id").cast("long").as("asset_id"))
         .withColumn("bytes", graft.llm.Multimodal.blockNoiseAviBytes(
           col("asset_id"), 16, 16, 2, frames = 4))

@@ -23,29 +23,8 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    // periodic trim, same shape as Bench's within-pass sweep: several
-    // operators persist internal frames whose lifecycle is the
-    // caller's, so a full 170-query dump used to accumulate every
-    // query's cached blocks and prefix-sum pins for the session's
-    // lifetime. Checkpointed RDDs stay (the pipeline memo roots there);
-    // releaseAll is sweep-safe - pipeline products are store-backed and
-    // an exempt pin dropped before its product materialized warns and
-    // counts (ShardedPrefixSum.unmaterializedReleases).
     val trimEvery = sys.env.getOrElse("SPARK_GRAFT_TRIM_EVERY", "16").toInt
-    selected.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, fn), i) =>
-      if (trimEvery > 0 && i > 0 && i % trimEvery == 0) {
-        graft.operators.ShardedPrefixSum.releaseAll()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .filterNot(_.isCheckpointed)
-          .foreach(_.unpersist(blocking = false))
-      }
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir, selected.toSeq.sortBy(_._1), trimEvery)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -61,6 +40,43 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the run record: queries attempted and the ones that threw (whose
+    // parquet dirs are missing or stale - the oracle compare must not
+    // be the first to notice)
+    Files.writeString(Paths.get(s"$outDir/verify.json"),
+      s"""{"queries":${selected.size},"failed":${failed.map(q).mkString("[", ",", "]")}}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Write each query's result to `outDir/<name>` as one parquet file;
+    * returns the names of the queries that threw.
+    *
+    * Periodic trim, same shape as Bench's within-pass sweep: several
+    * operators persist internal frames whose lifecycle is the caller's,
+    * so a full 170-query dump used to accumulate every query's cached
+    * blocks and prefix-sum pins for the session's lifetime.
+    * Checkpointed RDDs stay (the pipeline memo roots there); releaseAll
+    * is sweep-safe - pipeline products are store-backed and an exempt
+    * pin dropped before its product materialized warns and counts
+    * (ShardedPrefixSum.unmaterializedReleases). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, Bench.Query)], trimEvery: Int): Seq[String] =
+    queries.zipWithIndex.flatMap { case ((name, fn), i) =>
+      if (trimEvery > 0 && i > 0 && i % trimEvery == 0) {
+        graft.operators.ShardedPrefixSum.releaseAll()
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values
+          .filterNot(_.isCheckpointed)
+          .foreach(_.unpersist(blocking = false))
+      }
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
 }

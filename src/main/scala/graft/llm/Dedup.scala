@@ -122,6 +122,10 @@ object Dedup {
     *     switching between the fast xxhash64 path and its portable md5
     *     twin never changes recall through the cap.
     *
+    * Rows with a null id can never pair and are dropped first; a
+    * narrow input is then spread across the session's cores
+    * ([[Spread.ifNarrow]]) before the per-row signature.
+    *
     * @param bands  number of LSH bands (k must be divisible by bands)
     * @param threshold  estimated-Jaccard cutoff for reporting a pair
     */
@@ -132,7 +136,11 @@ object Dedup {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
 
-    val sigs = df.select(col(idCol).as("id"),
+    // null ids go BEFORE the spread: that keeps one exchange under
+    // every reference to `sigs` - otherwise the joins' pushed-down
+    // not-null filter forks them onto a second shuffle of the text
+    val sigs = Spread.ifNarrow(df.filter(col(idCol).isNotNull), idCol)
+      .select(col(idCol).as("id"),
       minhashTextSignature(col(textCol), shingleN, k).as("sig"))
 
     // explode to (id, band, bandHash); hash() digests the band slice
@@ -338,9 +346,12 @@ object Dedup {
       .distinct()
       .localCheckpoint()
 
-    var labels = sym.select(col("u").as("id")).distinct()
+    // the checkpoint `labels` currently reads; each round's supersedes
+    // the last, which is released once nothing reads it
+    var held = sym.select(col("u").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint()
+    var labels = held
 
     var converged = false
     var it = 0
@@ -365,12 +376,26 @@ object Dedup {
         .localCheckpoint()
       val changed = jumped.filter(col("lbl") =!= col("old")).limit(1).count()
       converged = changed == 0
+      releaseCheckpoint(held)
+      held = jumped
       labels = jumped.select(col("id"), col("lbl"))
       it += 1
     }
+    // only the returned labels' checkpoint outlives the call
+    releaseCheckpoint(sym)
+    if (!converged) releaseCheckpoint(held)
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels.select(col("id"), col("lbl").as("component"))
   }
+
+  /** Drop the blocks behind a `localCheckpoint()` frame. Its lineage is
+    * truncated, so the frame cannot be read afterwards. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false): Unit
+      case _ => ()
+    }
 
   /** Keep-one-per-cluster: the doc set minus near-duplicates. Survivors
     * are the minimum id of each connected component of the pair graph,

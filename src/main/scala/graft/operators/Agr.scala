@@ -31,7 +31,7 @@ object Agr {
     *
     * Input `curies`: (curie, geneSymbol, speciesTypeKey) distinct.
     * Returns (curie, speciesTypeKey, rgdId, how) where `how` is the
-    * resolution step ("map"/"specialId"/"symbol"/"inserted"/null) and
+    * resolution step ("map"/"specialId"/"symbol"/"insert"/null) and
     * rgdId < 0 marks rows needing synthesized genes (assigned by caller).
     */
   def resolveCuries(curies: DataFrame, xrefs: DataFrame, genes: DataFrame,

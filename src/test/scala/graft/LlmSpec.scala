@@ -454,6 +454,23 @@ class LlmSpec extends SparkSpec {
     assert(survivors == expected)
   }
 
+  test("connected components releases its intermediate checkpoints: one " +
+    "persistent RDD (the returned labels) outlives the call") {
+    // a 40-node path needs several pointer-jumping rounds, each leaving
+    // a checkpoint behind unless released; plus a star and a triangle
+    val edgeSeq = (1L until 40L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (100L, 102L), (100L, 103L),
+        (200L, 201L), (201L, 202L), (200L, 202L))
+    val truth = ((1L to 40L).map(_ -> 1L) ++
+      (100L to 103L).map(_ -> 100L) ++ (200L to 202L).map(_ -> 200L)).toMap
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val comps = Dedup.connectedComponents(edgeSeq.toDF("id_a", "id_b"))
+    val grown = sc.getPersistentRDDs.size - before
+    assert(grown <= 1, s"$grown persistent RDDs outlived the call")
+    assert(comps.as[(Long, Long)].collect().toMap == truth)
+  }
+
   test("nearDupClusterPick keeps the best-scored member per component") {
     // two components: {1,2,3} and {10,11}; scores favor 2 and 11;
     // 20 ties with nobody (not in any pair -> not in the output)

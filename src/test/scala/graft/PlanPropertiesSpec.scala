@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import graft.llm.{Dedup, PrepPipeline, Spread}
 import graft.operators.Cascade
 
 /** Physical-plan regression guards for the flagship operators: the
@@ -406,5 +412,130 @@ class PlanPropertiesSpec extends SparkSpec {
     // the sketch projection (bottom-k slice happens in the same stage)
     assert(plan.contains("SortMergeJoin") || plan.contains("BroadcastHashJoin") ||
       plan.contains("ShuffledHashJoin"), plan)
+  }
+
+  // ---- Spread.ifNarrow at the prep and MinHash entry points ----
+
+  /** Explicit-count repartitions (the kind AQE may not coalesce) in a
+    * physical plan, looking through adaptive plans and cache scans;
+    * one per distinct exchange, however often the plan references it. */
+  private def explicitRepartitions(plan: SparkPlan): Seq[ShuffleExchangeExec] = {
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        e +: walk(e.child)
+      case other => other.children.flatMap(walk)
+    }
+    walk(plan).groupBy(_.canonicalized).values.map(_.head).toSeq
+  }
+
+  /** Jobs started while `body` ran, counted by a listener: a sentinel
+    * job submitted after the body is waited for, and listener events
+    * arrive in order, so every job the body started has been seen. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.phase"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .getOrElse("")): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray.count(_ == "body")
+  }
+
+  private val spreadText =
+    "the quick brown fox jumps over the lazy dog and then it runs away " +
+      "to the forest with a spring in its step for a while"
+  /** 16 documents: distinct prose, near-dups, a URL, an exact dup and
+    * a too-short one - every prep stage and the band join have work. */
+  private def spreadDocs =
+    (1L to 16L).map { i =>
+      val text =
+        if (i == 5) "too short"
+        else if (i == 6) spreadText.toUpperCase
+        else if (i % 4 == 0) s"$spreadText see https://example.com/$i now"
+        else if (i % 3 == 0) s"$spreadText variant ${i % 2}"
+        else s"document $i " + (1 to 30).map(j => s"w${(i * 7 + j * j) % 53}").mkString(" ")
+      (i, if (i % 2 == 0) "web" else "books", text)
+    }.toDF("doc_id", "source", "text")
+
+  private def prepRows(df: DataFrame) =
+    PrepPipeline.run(df).collect().map(_.toString).sorted.toSeq
+  private def pairRows(df: DataFrame) =
+    Dedup.minhashLshPairs(df, threshold = 0.5)
+      .collect().map(_.toString).sorted.toSeq
+
+  test("spread: a one-partition input to prep and MinHash gets exactly one " +
+    "explicit repartition to spark.sql.shuffle.partitions, same rows as " +
+    "the input pre-spread") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // one small parquet file = one split, with a NULLABLE id (a filter
+    // pushed below the spread must not fork a second text shuffle)
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    spreadDocs.coalesce(1).write.mode("overwrite").parquet(dir)
+    val narrow = spark.read.parquet(dir)
+    assert(Spread.plannedPartitions(
+      narrow.queryExecution.executedPlan) == 1)
+    val preSpread = narrow.repartition(n, col("doc_id"))
+    for (plan <- Seq(PrepPipeline.run(narrow),
+                     Dedup.minhashLshPairs(narrow))) {
+      val reps = explicitRepartitions(plan.queryExecution.executedPlan)
+      assert(reps.size == 1, reps.mkString("\n"))
+      assert(reps.head.numPartitions == n, reps.head)
+    }
+    assert(pairRows(narrow).nonEmpty)
+    assert(prepRows(narrow) == prepRows(preSpread))
+    assert(pairRows(narrow) == pairRows(preSpread))
+  }
+
+  test("spread: an input with at least spark.sql.shuffle.partitions " +
+    "partitions gets no added exchange") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // local rows: one partition per core, no exchange anywhere
+    val wide = spreadDocs
+    assert(Spread.plannedPartitions(
+      wide.queryExecution.executedPlan) >= n)
+    // already behind an exchange wider than the session's
+    val shuffled = spreadDocs.repartition(2 * n, col("doc_id"))
+    for (run <- Seq((d: DataFrame) => PrepPipeline.run(d),
+                    (d: DataFrame) => Dedup.minhashLshPairs(d))) {
+      assert(explicitRepartitions(run(wide).queryExecution.executedPlan).isEmpty)
+      val reps = explicitRepartitions(run(shuffled).queryExecution.executedPlan)
+      assert(reps.map(_.numPartitions) == Seq(2 * n), reps.mkString("\n"))
+    }
+  }
+
+  test("spread: composing prep or MinHash over an input containing an " +
+    "exchange starts no Spark job") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val inputs = Seq(spreadDocs.repartition(1), // narrow: gets spread
+      spreadDocs.repartition(2 * n, col("doc_id"))) // wide: left alone
+    for (d <- inputs) {
+      val jobs = jobsStartedBy {
+        PrepPipeline.run(d).queryExecution.executedPlan
+        Dedup.minhashLshPairs(d).queryExecution.executedPlan: Unit
+      }
+      assert(jobs == 0, s"$jobs job(s) started while composing")
+    }
+    // the counter works: reading partitions off the RDD runs the
+    // adaptive plan's shuffle stage
+    assert(jobsStartedBy(spreadDocs.repartition(1).rdd.getNumPartitions: Unit) > 0)
   }
 }
