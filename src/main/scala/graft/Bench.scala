@@ -32,6 +32,18 @@ object Bench {
     Pass(times, failed.result())
   }
 
+  /** Relative gap between the cold (first) and warm (last) pass totals
+    * of one attempt, over the queries that ran in every pass: a query
+    * that threw in any pass is left out of both totals, the same rule
+    * the record's timings follow. */
+  def coldWarmSkew(ps: Seq[Pass]): Double = {
+    val failed = ps.flatMap(_.failed).toSet
+    def total(p: Pass) = p.times.filterNot(t => failed(t._1)).map(_._2).sum
+    val c = total(ps.head)
+    val w = total(ps.last)
+    if (math.min(c, w) > 0) math.abs(c - w) / math.min(c, w) else 0.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -188,11 +200,6 @@ object Bench {
         if (i > 1 || !firstAttempt) resetPassState()
         pass(spark, sfDir, selected, trimEvery, () => trimPassState())
       }
-    def skewOf(ps: Seq[Pass]): Double = {
-      val c = ps.head.times.map(_._2).sum
-      val w = ps.last.times.map(_._2).sum
-      if (math.min(c, w) > 0) math.abs(c - w) / math.min(c, w) else 0.0
-    }
     // skew-retry (the r14 hole in the quiet gate): a run that passes
     // the loadavg gate can still burn its cold pass into a skew-invalid
     // record when contention arrives MID-run (BENCH_r14: loadavg_first
@@ -215,8 +222,8 @@ object Bench {
       else math.max(0, sys.env.getOrElse("SPARK_GRAFT_SKEW_RETRIES", "1").toInt)
     var runs = Vector(runPasses(firstAttempt = true))
     var skewAttempts = 1
-    while (skewOf(runs.last) > 0.25 && skewAttempts <= skewRetries) {
-      System.err.println(f"[bench] cold/warm skew ${skewOf(runs.last)}%.3f" +
+    while (coldWarmSkew(runs.last) > 0.25 && skewAttempts <= skewRetries) {
+      System.err.println(f"[bench] cold/warm skew ${coldWarmSkew(runs.last)}%.3f" +
         " > 0.25 (mid-run contention) - skew-retry: re-running the pass set " +
         s"(attempt ${skewAttempts + 1})")
       loadAvg().filter(_ > 2.0).foreach { l =>

@@ -122,10 +122,6 @@ object Dedup {
     *     switching between the fast xxhash64 path and its portable md5
     *     twin never changes recall through the cap.
     *
-    * Rows with a null id can never pair and are dropped first; a
-    * narrow input is then spread across the session's cores
-    * ([[Spread.ifNarrow]]) before the per-row signature.
-    *
     * @param bands  number of LSH bands (k must be divisible by bands)
     * @param threshold  estimated-Jaccard cutoff for reporting a pair
     */
@@ -136,11 +132,7 @@ object Dedup {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
 
-    // null ids go BEFORE the spread: that keeps one exchange under
-    // every reference to `sigs` - otherwise the joins' pushed-down
-    // not-null filter forks them onto a second shuffle of the text
-    val sigs = Spread.ifNarrow(df.filter(col(idCol).isNotNull), idCol)
-      .select(col(idCol).as("id"),
+    val sigs = df.select(col(idCol).as("id"),
       minhashTextSignature(col(textCol), shingleN, k).as("sig"))
 
     // explode to (id, band, bandHash); hash() digests the band slice

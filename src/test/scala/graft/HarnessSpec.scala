@@ -23,6 +23,16 @@ class HarnessSpec extends SparkSpec {
     assert(trims == 1) // before the third query
   }
 
+  test("cold/warm skew compares only the queries that ran in every pass") {
+    // q_b threw in the warm pass only: with it, cold 1.5 s vs warm 1.0 s
+    // would read as 0.5 skew and trigger a retry; without it, none
+    val cold = Bench.Pass(Seq("q_a" -> 1.0, "q_b" -> 0.5), Nil)
+    val warm = Bench.Pass(Seq("q_a" -> 1.0), Seq("q_b"))
+    assert(Bench.coldWarmSkew(Seq(cold, warm)) == 0.0)
+    assert(Bench.coldWarmSkew(Seq(cold, cold.copy(times = Seq(
+      "q_a" -> 1.25, "q_b" -> 0.5)))) == 0.25 / 1.5)
+  }
+
   test("Verify.dump lists throwing queries as failed and writes the rest") {
     val out = java.nio.file.Files.createTempDirectory("graft_verify_spec").toString
     val failed = Verify.dump(spark, "unused", out, queries, trimEvery = 0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import graft.llm.{Dedup, PrepPipeline, Spread}
+import graft.llm.{PrepPipeline, Spread}
 import graft.operators.Cascade
 
 /** Physical-plan regression guards for the flagship operators: the
@@ -414,7 +414,7 @@ class PlanPropertiesSpec extends SparkSpec {
       plan.contains("ShuffledHashJoin"), plan)
   }
 
-  // ---- Spread.ifNarrow at the prep and MinHash entry points ----
+  // ---- Spread.ifNarrow at the prep entry point ----
 
   /** Explicit-count repartitions (the kind AQE may not coalesce) in a
     * physical plan, looking through adaptive plans and cache scans;
@@ -464,7 +464,7 @@ class PlanPropertiesSpec extends SparkSpec {
     "the quick brown fox jumps over the lazy dog and then it runs away " +
       "to the forest with a spring in its step for a while"
   /** 16 documents: distinct prose, near-dups, a URL, an exact dup and
-    * a too-short one - every prep stage and the band join have work. */
+    * a too-short one - every prep stage has work. */
   private def spreadDocs =
     (1L to 16L).map { i =>
       val text =
@@ -478,31 +478,24 @@ class PlanPropertiesSpec extends SparkSpec {
 
   private def prepRows(df: DataFrame) =
     PrepPipeline.run(df).collect().map(_.toString).sorted.toSeq
-  private def pairRows(df: DataFrame) =
-    Dedup.minhashLshPairs(df, threshold = 0.5)
-      .collect().map(_.toString).sorted.toSeq
 
-  test("spread: a one-partition input to prep and MinHash gets exactly one " +
-    "explicit repartition to spark.sql.shuffle.partitions, same rows as " +
-    "the input pre-spread") {
+  test("spread: a one-partition input to prep gets exactly one explicit " +
+    "repartition to spark.sql.shuffle.partitions, same rows as the input " +
+    "pre-spread") {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // one small parquet file = one split, with a NULLABLE id (a filter
-    // pushed below the spread must not fork a second text shuffle)
+    // one small parquet file = one split
     val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
     spreadDocs.coalesce(1).write.mode("overwrite").parquet(dir)
     val narrow = spark.read.parquet(dir)
     assert(Spread.plannedPartitions(
       narrow.queryExecution.executedPlan) == 1)
     val preSpread = narrow.repartition(n, col("doc_id"))
-    for (plan <- Seq(PrepPipeline.run(narrow),
-                     Dedup.minhashLshPairs(narrow))) {
-      val reps = explicitRepartitions(plan.queryExecution.executedPlan)
-      assert(reps.size == 1, reps.mkString("\n"))
-      assert(reps.head.numPartitions == n, reps.head)
-    }
-    assert(pairRows(narrow).nonEmpty)
+    val reps = explicitRepartitions(
+      PrepPipeline.run(narrow).queryExecution.executedPlan)
+    assert(reps.size == 1, reps.mkString("\n"))
+    assert(reps.head.numPartitions == n, reps.head)
+    assert(prepRows(narrow).nonEmpty)
     assert(prepRows(narrow) == prepRows(preSpread))
-    assert(pairRows(narrow) == pairRows(preSpread))
   }
 
   test("spread: an input with at least spark.sql.shuffle.partitions " +
@@ -514,24 +507,20 @@ class PlanPropertiesSpec extends SparkSpec {
       wide.queryExecution.executedPlan) >= n)
     // already behind an exchange wider than the session's
     val shuffled = spreadDocs.repartition(2 * n, col("doc_id"))
-    for (run <- Seq((d: DataFrame) => PrepPipeline.run(d),
-                    (d: DataFrame) => Dedup.minhashLshPairs(d))) {
-      assert(explicitRepartitions(run(wide).queryExecution.executedPlan).isEmpty)
-      val reps = explicitRepartitions(run(shuffled).queryExecution.executedPlan)
-      assert(reps.map(_.numPartitions) == Seq(2 * n), reps.mkString("\n"))
-    }
+    assert(explicitRepartitions(
+      PrepPipeline.run(wide).queryExecution.executedPlan).isEmpty)
+    val reps = explicitRepartitions(
+      PrepPipeline.run(shuffled).queryExecution.executedPlan)
+    assert(reps.map(_.numPartitions) == Seq(2 * n), reps.mkString("\n"))
   }
 
-  test("spread: composing prep or MinHash over an input containing an " +
-    "exchange starts no Spark job") {
+  test("spread: composing prep over an input containing an exchange " +
+    "starts no Spark job") {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val inputs = Seq(spreadDocs.repartition(1), // narrow: gets spread
       spreadDocs.repartition(2 * n, col("doc_id"))) // wide: left alone
     for (d <- inputs) {
-      val jobs = jobsStartedBy {
-        PrepPipeline.run(d).queryExecution.executedPlan
-        Dedup.minhashLshPairs(d).queryExecution.executedPlan: Unit
-      }
+      val jobs = jobsStartedBy(PrepPipeline.run(d).queryExecution.executedPlan: Unit)
       assert(jobs == 0, s"$jobs job(s) started while composing")
     }
     // the counter works: reading partitions off the RDD runs the
